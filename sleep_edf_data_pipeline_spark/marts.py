@@ -107,8 +107,3 @@ def serve(
             # byte-equivalent (deterministic build); keep it
             shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.parquet(path)
-
-
-def clear_marts() -> None:
-    """Drop every materialized mart (tests / explicit reset)."""
-    shutil.rmtree(MART_ROOT, ignore_errors=True)

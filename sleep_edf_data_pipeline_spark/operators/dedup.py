@@ -101,51 +101,6 @@ def with_minhash(
     )
 
 
-def lsh_candidate_pairs(
-    signed: DataFrame,
-    id_col: str,
-    bands: int = 4,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """LSH banding: docs sharing any band bucket become candidate pairs.
-
-    Explode k = bands×rows_per_band signatures into band hashes, then
-    self-equi-join on (band_idx, band_hash) with id_a < id_b.  Returns
-    distinct (id_a, id_b).
-    """
-    band_hash = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at("sig", b * rows_per_band + r + 1).cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-        ).alias(f"_band_{b}")
-        for b in range(bands)
-    ]
-    banded = signed.select(F.col(id_col), *band_hash)
-    long = banded.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"_band_{b}") for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    left = long.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
-    )
-    right = long.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash"
-    )
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two array columns (as sets)."""
     inter = F.size(F.array_intersect(a, b)).cast("double")

@@ -81,18 +81,6 @@ def with_transition_flag(
     return df.withColumn(out_col, flag)
 
 
-def with_running_sum(
-    df: DataFrame,
-    col: str,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    out_col: str,
-) -> DataFrame:
-    """sum(col) over rows unbounded preceding..current (R9)."""
-    w = entity_window(partition_by, order_by).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_col, F.sum(col).over(w))
-
-
 #: Fixed-point scale for z-score power sums: 2^20 (≈ 1e-6 quantization,
 #: the same precision as the round-to-6 output contract).  Smaller than
 #: FP_SCALE because the SQUARED sums must fit DECIMAL(38,0):
@@ -112,6 +100,7 @@ def with_group_zscore(
     partition_by: Sequence[str],
     order_by: Sequence[str] = (),
     suffix: str = "_z",
+    digits: int | None = None,
 ) -> DataFrame:
     """Per-group z-score via grouped power sums + broadcast join (R19).
 
@@ -132,6 +121,11 @@ def with_group_zscore(
     per entity, so this costs a partial agg + broadcast instead of
     buffering every partition inside a whole-partition window frame
     (the shape that regressed 1.9× in round 2).
+
+    ``digits`` rounds each z-score half-up to that many places, keeping
+    the sign of a negative value that rounds to zero.  Spark's ``round``
+    goes through ``BigDecimal``, which has no negative zero, so it
+    returns ``0.0`` where DuckDB (and so the reference) returns ``-0.0``.
     """
     keys = list(partition_by)
     aggs = []
@@ -163,7 +157,11 @@ def with_group_zscore(
         # DuckDB sqrt(neg) raises.  NULL-on-nonpositive is the one
         # behavior both engines express identically.
         std = F.when((n > 1) & (var > 0), F.sqrt(var))
-        out[f"{c}{suffix}"] = (F.col(c) - mean) / std
+        z = (F.col(c) - mean) / std
+        if digits is not None:
+            r = F.round(z, digits)
+            z = F.when(r == 0, r * F.signum(z)).otherwise(r)
+        out[f"{c}{suffix}"] = z
     joined = joined.withColumns(out)
     drop = [f"__k_{k}" for k in keys]
     drop += [f"__{p}_{c}" for c in cols for p in ("n", "sq", "sqq")]

@@ -169,10 +169,11 @@ def summary(metrics_df: DataFrame, epoch_minutes: float = EPOCH_MINUTES) -> Data
     )
 
 
-def features(metrics_df: DataFrame) -> DataFrame:
+def features(metrics_df: DataFrame, z_digits: int | None = None) -> DataFrame:
     """Per-epoch ML features: biomarker ratios + per-subject z-scores (R18-R19).
 
-    Reference: ``models/marts/ml/sleep_features.sql``.
+    ``z_digits`` rounds the z-scores, sign-preserving (see
+    ``with_group_zscore``).  Reference: ``models/marts/ml/sleep_features.sql``.
     """
     ratios = metrics_df.withColumns(
         {
@@ -192,6 +193,7 @@ def features(metrics_df: DataFrame) -> DataFrame:
         ["delta_beta_ratio", "delta_alpha_ratio", "theta_alpha_ratio"],
         ENTITY,
         order_by=ORDER,
+        digits=z_digits,
     )
     return z.select(
         "epoch_id",

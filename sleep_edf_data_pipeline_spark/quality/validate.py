@@ -80,16 +80,6 @@ def run_checks(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
     return agg.unpivot([], [c.name for c in checks], "check_name", "violations")
 
 
-def unique_violations(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """V3: keys occurring more than once (returns the duplicated keys)."""
-    return (
-        df.groupBy(*cols)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .select(*cols, F.col("n").alias("occurrences"))
-    )
-
-
 def uniqueness_check(df: DataFrame, cols: Sequence[str], name: str | None = None) -> DataFrame:
     """V3 as a (check_name, violations) row: count of surplus duplicates."""
     label = name or f"unique_{'_'.join(cols)}"

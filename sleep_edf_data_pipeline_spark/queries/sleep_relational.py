@@ -302,20 +302,17 @@ SELECT
 
 # --- R18-R19: ratio features + per-group z-scores --------------------------
 
-_FEATURE_FLOAT_COLS = [
-    "delta_beta_ratio_z",
-    "delta_beta_ratio",
-    "delta_alpha_ratio_z",
-    "delta_alpha_ratio",
-    "theta_alpha_ratio_z",
-    "theta_alpha_ratio",
-]
+_FEATURE_RATIO_COLS = ["delta_beta_ratio", "delta_alpha_ratio", "theta_alpha_ratio"]
 
 
 def q_sleep_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R18-R19: nullif-guarded biomarker ratios + per-subject z-scores."""
+    """R18-R19: nullif-guarded biomarker ratios + per-subject z-scores.
+
+    The z-scores are rounded inside ``features`` so that a tiny negative
+    one keeps DuckDB's ``-0.0``; a second ``round`` would drop the sign.
+    """
     m = sp.metrics(_staged(spark, sf_dir), gap_epochs=GAP_EVENTS)
-    return _r6(sp.features(m), _FEATURE_FLOAT_COLS)
+    return _r6(sp.features(m, z_digits=6), _FEATURE_RATIO_COLS)
 
 
 # Fixed-point z-score, mirroring operators/windows.py::with_group_zscore

@@ -53,12 +53,6 @@ def read_epochs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def truncate_epochs(spark: SparkSession, path: str) -> None:
-    """S11: drop all rows (overwrite with an empty frame, schema kept)."""
-    empty = spark.createDataFrame([], read_epochs(spark, path).schema)
-    empty.write.mode("overwrite").parquet(path)
-
-
 def error_row(
     spark: SparkSession,
     subject_id: int | None,
