@@ -1,10 +1,20 @@
-"""Dump the executed-plan trees of the headline heavyweights.
+"""Dump physical plans of registry queries.
 
-Writes PLANS_r{N}.md: the physical plan tree (the part of
+Default mode writes PLANS_r{N}.md: the physical plan tree (the part of
 ``explain("formatted")`` a reviewer scans for exchanges, broadcasts,
-codegen spans, and pushdown) for each listed query at the given SF.
+codegen spans, and pushdown) for each headline heavyweight at the
+given SF.
+
+``--out-dir`` mode writes the FULL ``explain("formatted")`` output of
+each named query to ``<dir>/<query>_<tag>.txt`` — captured before and
+after a change (tag e.g. "before" / "after") so plan shapes can be
+diffed (Exchange count, join strategy, PushedFilters, codegen spans).
+Its sf dir comes from $SPARK_GRAFT_SF_DIR; use the bench SF (sf0.1):
+plans are shape-stable across SFs, but the bench SF is the one whose
+AQE thresholds matter.
 
 Usage: python scripts/dump_plans.py [sf_dir] [out.md]
+       python scripts/dump_plans.py --out-dir plans/r13 <tag> <name> [<name> ...]
 """
 
 from __future__ import annotations
@@ -151,7 +161,31 @@ PLANNED = [
 ]
 
 
+def _formatted(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+def dump_tagged(out_dir: str, tag: str, names: list[str]) -> None:
+    """Full formatted plan of each named query → ``<out_dir>/<name>_<tag>.txt``."""
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name="dump-plans")
+    queries, _ = registry.collect()
+    for name in names:
+        tree = _formatted(spark, queries[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(tree)
+        print(f"wrote {path} ({len(tree.splitlines())} lines)")
+        spark.catalog.clearCache()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--out-dir"]:
+        dump_tagged(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "PLANS_r10.md"
     spark = get_spark(app_name="dump-plans")
@@ -170,15 +204,7 @@ def main() -> None:
     ]
     for name in PLANNED:
         df = queries[name](spark, sf_dir)
-        tree = (
-            df._jdf.queryExecution()
-            .explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            .split("\n\n")[0]
-        )
+        tree = _formatted(spark, df).split("\n\n")[0]
         tlines = tree.split("\n")
         if len(tlines) > 120:  # iterative queries unroll huge trees
             tlines = tlines[:120] + [

@@ -14,15 +14,19 @@ Scale notes:
 - LSH candidate generation is an equi-join on (band_idx, band_hash):
   Catalyst plans a plain shuffled hash join keyed on small fixed-width
   values; skewed buckets (a band hash shared by thousands of docs) are
-  split by AQE skew-join handling.
-- signatures/bands are recomputed per side rather than cached —
-  cheaper than materializing at PB scale; callers can persist the
-  signature frame when reused.
+  split by AQE skew-join handling — but verifying every pair of a wide
+  bucket stays quadratic in its width.  When only the ids that lose a
+  pair are needed (pruning), ``minhash_lsh_dup_ids`` verifies at most
+  ``bands`` pairs per document first and enumerates full candidates
+  only for the few ids that shortlist leaves undecided.
+- ``minhash_lsh_dedup`` persists its signature frame (three readers)
+  and leaves its lifetime to the caller; ``minhash_lsh_dup_ids``
+  persists nothing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, perm_coeffs, perm_hash
@@ -85,27 +89,119 @@ def with_minhash(
     ``transform`` formulation measured 159× slower than the DuckDB
     oracle at sf0.1; this one is at parity).
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
-    ).withColumn("_h", hash64(F.col("_s")))
-    mins = sh.groupBy(id_col).agg(
-        *[
-            F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
-            for j, (a, b) in enumerate(perm_coeffs(k))
-        ]
-    )
+    mins = _signatures(df, id_col, text_col, k, shingle_n, with_sets=False)
     return mins.select(
         F.col(id_col),
         F.array(*[F.col(f"_m{j}") for j in range(k)]).alias("sig"),
     )
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two array columns (as sets)."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def _signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    shingle_n: int,
+    with_sets: bool = True,
+) -> DataFrame:
+    """(id, ``_m0``..``_m{k-1}``[, ``_hset``]) in ONE map-side-combining
+    groupBy over the exploded shingles: the k minhash mins and the
+    distinct-shingle-hash set (``collect_set``) the verify step
+    intersects — document text is hashed once and never re-shingled
+    for verification."""
+    sh = df.select(
+        F.col(id_col),
+        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
+    ).withColumn("_h", hash64(F.col("_s")))
+    min_cols = [
+        F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
+        for j, (a, b) in enumerate(perm_coeffs(k))
+    ]
+    set_cols = [F.collect_set("_h").alias("_hset")] if with_sets else []
+    return sh.groupBy(id_col).agg(*min_cols, *set_cols)
+
+
+def _band_rows(
+    sig: DataFrame,
+    id_col: str,
+    bands: int,
+    rows_per_band: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, _keys, *carry, band_idx, band_key): one row per doc per band.
+
+    Band key = ``xxhash64`` of the raw signature slice — band hashes are
+    internal, only slice *equality* matters.
+    """
+    keys = F.array(
+        *[
+            F.xxhash64(
+                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select(F.col(id_col), keys.alias("_keys"), *carry).select(
+        F.col(id_col),
+        "_keys",
+        *carry,
+        F.posexplode("_keys").alias("band_idx", "band_key"),
+    )
+
+
+def _first_match(idx: Column, ka: str, kb: str, n: int) -> Column:
+    """True only at the LOWEST index where key arrays ``ka``/``kb`` agree.
+
+    Joined on (index, key), a pair of rows sharing several keys is
+    emitted once — from its first shared index, since every earlier
+    key must differ — so pairs are unique by construction and no
+    distinct shuffle runs over the exploded pair set.
+    """
+    cond = F.lit(True)
+    for j in range(n - 1):
+        cond = cond & (
+            (idx <= j) | (F.element_at(ka, j + 1) != F.element_at(kb, j + 1))
+        )
+    return cond
+
+
+def _jaccard(set_a: Column, n_a: Column, set_b: Column, n_b: Column) -> Column:
+    """Exact Jaccard of two distinct-hash sets of sizes n_a/n_b, round 6.
+
+    ``|A∪B| = |A|+|B|-|A∩B|`` — no union array is materialized, and
+    intersecting fixed-width ints beats intersecting strings.
+    """
+    inter = F.size(F.array_intersect(set_a, set_b)).cast("double")
+    union = (n_a + n_b).cast("double") - inter
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
+
+
+def _set_join_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard) for each pair, verified on set joins.
+
+    ``sets`` is (id, distinct-hash set, set size), one row per
+    document; both sides' sets join back onto the pairs only.
+    """
+    id_col, set_col, n_col = sets.columns
+    a, b = (
+        sets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(set_col).alias(f"set_{s}"),
+            F.col(n_col).alias(f"n_{s}"),
+        )
+        for s in "ab"
+    )
+    return (
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            _jaccard(F.col("set_a"), F.col("n_a"), F.col("set_b"), F.col("n_b")).alias(
+                "jaccard"
+            ),
+        )
+    )
 
 
 def minhash_lsh_dedup(
@@ -121,7 +217,10 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidates → exact-Jaccard verify.
 
-    Returns (id_a, id_b, jaccard) for verified pairs ≥ threshold.
+    Returns (id_a, id_b, jaccard) for verified pairs ≥ threshold.  EVERY
+    pair sharing a band bucket is verified, so on a corpus with wide
+    buckets the work approaches all pairs; a caller that only needs the
+    ids losing a pair wants :func:`minhash_lsh_dup_ids`.
 
     ``candidates_only=True`` stops after the banded candidate
     generation and returns the unique (id_a, id_b) pairs UNVERIFIED —
@@ -134,57 +233,16 @@ def minhash_lsh_dedup(
     aggregation without changing any result (guide §1.2: don't compute
     what the composition throws away).
 
-    One pass over the exploded shingles computes BOTH the k minhash
-    mins and the distinct-shingle-hash set (``collect_set``) in a
-    single map-side-combining groupBy — document text is hashed once
-    and never re-shingled for verification.  Candidate generation runs
-    on a slim (id, band_key) frame (band key = ``xxhash64`` of the raw
-    signature slice — band hashes are internal, only slice *equality*
-    matters); the per-doc hash sets join back only onto the distinct
-    candidate pairs.  Jaccard is verified on bigint sets with
-    ``|A∪B| = |A|+|B|-|A∩B|`` — no union array is materialized, and
-    intersecting fixed-width ints beats intersecting strings.  The
-    signature frame is persisted: it is read three times (two band
-    sides, set join) and is tiny relative to the corpus (k×8B + the
-    distinct token hashes per doc).
+    Candidate generation is an equi-join of a slim (id, band_key) frame
+    with itself; the per-doc hash sets join back only onto the distinct
+    candidate pairs.  The signature frame is persisted: it is read
+    three times (two band sides, set join) and is tiny relative to the
+    corpus (k×8B + the distinct token hashes per doc).
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
-    ).withColumn("_h", hash64(F.col("_s")))
-    min_cols = [
-        F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
-        for j, (a, b) in enumerate(perm_coeffs(k))
-    ]
-    set_cols = [] if candidates_only else [F.collect_set("_h").alias("_hset")]
-    agg = sh.groupBy(id_col).agg(*min_cols, *set_cols).persist()
-
-    keys = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    long = agg.select(
-        F.col(id_col),
-        keys.alias("_keys"),
-    ).select(
-        F.col(id_col),
-        "_keys",
-        F.posexplode("_keys").alias("band_idx", "band_key"),
-    )
-    # First-matching-band dedup: a pair is emitted ONLY from the lowest
-    # band index where the two signatures agree (for every earlier band
-    # the keys must differ) — candidate pairs are unique by
-    # construction, so no distinct shuffle over the exploded pair set.
-    first_match = None
-    for j in range(bands - 1):
-        cond = (F.col("band_idx") <= j) | (
-            F.element_at("_ka", j + 1) != F.element_at("_kb", j + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
+    sig = _signatures(
+        df, id_col, text_col, k, shingle_n, with_sets=not candidates_only
+    ).persist()
+    long = _band_rows(sig, id_col, bands, rows_per_band)
     cands = (
         long.select(
             F.col(id_col).alias("id_a"),
@@ -201,41 +259,113 @@ def minhash_lsh_dedup(
             ),
             ["band_idx", "band_key"],
         )
-        .filter((F.col("id_a") < F.col("id_b")) & first_match)
+        .filter(
+            (F.col("id_a") < F.col("id_b"))
+            & _first_match(F.col("band_idx"), "_ka", "_kb", bands)
+        )
         .select("id_a", "id_b")
     )
     if candidates_only:
         return cands
 
-    sets = agg.select(
-        F.col(id_col), F.col("_hset"), F.size("_hset").alias("_n")
+    sets = sig.select(F.col(id_col), F.col("_hset"), F.size("_hset").alias("_n"))
+    return _set_join_jaccard(cands, sets).filter(F.col("jaccard") >= threshold)
+
+
+def minhash_lsh_dup_ids(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 16,
+    shingle_n: int = 1,
+    bands: int = 4,
+    rows_per_band: int = 4,
+    threshold: float = 0.6,
+) -> DataFrame:
+    """Ids that lose a verified MinHash-LSH pair, in two verified passes.
+
+    Returns one column, ``id_col``: every id ``b`` that shares a band
+    bucket with some lower id ``a`` whose round-6 Jaccard with ``b`` is
+    ≥ ``threshold`` — exactly ``minhash_lsh_dedup(...).select("id_b")
+    .distinct()``, but verifying a bounded shortlist first (filter →
+    verify) instead of every candidate pair:
+
+    1. each document is verified against the LOWEST id of each of its
+       band buckets — at most ``bands`` pairs per document; an id with
+       a passing pair is decided (a duplicate);
+    2. only the ids pass 1 left undecided (a lower id shares a bucket,
+       but no bucket minimum passed) are joined to ALL their lower-id
+       candidates and verified, as :func:`minhash_lsh_dedup` does.
+
+    Lossless by construction, not by corpus: every pass-1 pair is a
+    real candidate pair, and pass 2 is the full candidate set
+    restricted to the undecided ids.  Cost: at most ``bands`` verified
+    pairs per document, plus the old candidates of the undecided ids
+    only — on a near-duplicate-heavy corpus (wide buckets) almost every
+    id is decided in pass 1, where verifying every pair is quadratic.
+
+    Pass 1 is two window passes over the band rows: the bucket minimum
+    (one bucket per window partition, linear in its width where the
+    pair join is quadratic in it), then each document's best pass-1
+    score.  Pass 2 is one left join in which a decided document's rows
+    carry a NULL band key, so they match nothing and only pass through.
+    Nothing is persisted, so no cache outlives the caller's action; the
+    price is computing the signature aggregation twice (the pass-1
+    chain and the join's other side).  Spark's exchange reuse cannot
+    share it: under AQE it does not apply to plans that read a cached
+    input, which is how pipeline stages arrive here.
+    """
+    sig = _signatures(df, id_col, text_col, k, shingle_n)
+    long = _band_rows(sig, id_col, bands, rows_per_band, carry=("_hset",)).withColumn(
+        "_n", F.size("_hset")
     )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    return (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
+    bucket = Window.partitionBy("band_idx", "band_key")
+    low = F.col("_low")
+    scored = (
+        long.withColumn("_low_id", F.min(id_col).over(bucket))
+        .withColumn("_low", F.min_by("_hset", id_col).over(bucket))
         .withColumn(
-            "jaccard",
-            F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6),
+            "_j1",
+            F.when(
+                F.col(id_col) > F.col("_low_id"),
+                _jaccard(low, F.size(low), F.col("_hset"), F.col("_n")),
+            ),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .withColumn("_best", F.max("_j1").over(Window.partitionBy(id_col)))
+        # a document lowest in every bucket it shares has no candidate
+        .filter(F.col("_best").isNotNull())
     )
+    undecided = F.col("_best") < threshold
+    b = scored.select(
+        F.col(id_col).alias("id_b"),
+        F.col("_keys").alias("_kb"),
+        F.col("band_idx").alias("_bi"),
+        F.when(undecided, F.col("band_key")).alias("_bk"),
+        F.col("_hset").alias("set_b"),
+        F.col("_n").alias("n_b"),
+        "_best",
+    )
+    a = long.select(
+        F.col(id_col).alias("id_a"),
+        F.col("_keys").alias("_ka"),
+        "band_idx",
+        "band_key",
+        F.col("_hset").alias("set_a"),
+        F.col("_n").alias("n_a"),
+    )
+    pairs = b.join(
+        a,
+        (F.col("_bi") == F.col("band_idx"))
+        & (F.col("_bk") == F.col("band_key"))
+        & (F.col("id_a") < F.col("id_b"))
+        & _first_match(F.col("_bi"), "_ka", "_kb", bands),
+        "left",
+    )
+    hit = (F.col("_best") >= threshold) | (
+        _jaccard(F.col("set_a"), F.col("n_a"), F.col("set_b"), F.col("n_b"))
+        >= threshold
+    )
+    return pairs.filter(hit).select(F.col("id_b").alias(id_col)).distinct()
 
 
 def ngram_jaccard_join(
@@ -350,31 +480,8 @@ def ngram_jaccard_join(
         .filter(F.col("_ub") >= F.col("_need"))
         .select("id_a", "id_b")
     )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    return (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _set_join_jaccard(cands, sets.select(id_col, "hset", "_n")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -474,19 +581,12 @@ def simhash_near_dups(
         "chunk_idx",
         "chunk_val",
     )
-    # First-matching-chunk dedup: emit a pair only from the lowest chunk
-    # index where the fingerprints agree — pairs are unique by
-    # construction and the distinct shuffle over the exploded pair set
-    # disappears (same trick as the LSH band join).
-    first_match = None
-    for j in range(chunks - 1):
-        cond = (F.col("chunk_idx") <= j) | (
-            F.element_at("_ca", j + 1) != F.element_at("_cb", j + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
     return (
         a.join(b, ["chunk_idx", "chunk_val"])
-        .filter((F.col("id_a") < F.col("id_b")) & first_match)
+        .filter(
+            (F.col("id_a") < F.col("id_b"))
+            & _first_match(F.col("chunk_idx"), "_ca", "_cb", chunks)
+        )
         .withColumn(
             "hamming",
             F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int"),
@@ -545,26 +645,7 @@ def incremental_minhash_dedup(
         F.first("_src").alias("_src"),
     ).persist()
 
-    keys = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    long = agg.select(F.col(id_col), F.col("_src"), keys.alias("_keys")).select(
-        F.col(id_col),
-        "_src",
-        "_keys",
-        F.posexplode("_keys").alias("band_idx", "band_key"),
-    )
-    first_match = None
-    for j in range(bands - 1):
-        cond = (F.col("band_idx") <= j) | (
-            F.element_at("_ka", j + 1) != F.element_at("_kb", j + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
+    long = _band_rows(agg, id_col, bands, rows_per_band, carry=("_src",))
     admissible = (F.col("src_b") == 1) & (
         (F.col("src_a") == 0)
         | ((F.col("src_a") == 1) & (F.col("id_a") < F.col("id_b")))
@@ -587,35 +668,18 @@ def incremental_minhash_dedup(
             ),
             ["band_idx", "band_key"],
         )
-        .filter((F.col("id_a") != F.col("id_b")) & admissible & first_match)
+        .filter(
+            (F.col("id_a") != F.col("id_b"))
+            & admissible
+            & _first_match(F.col("band_idx"), "_ka", "_kb", bands)
+        )
         .select("id_a", "id_b")
     )
 
     sets = agg.select(F.col(id_col), F.col("_hset"), F.size("_hset").alias("_n"))
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union_n = (F.col("n_a") + F.col("n_b")).cast("double") - inter
     matches = (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "_j",
-            F.round(F.when(union_n > 0, inter / union_n).otherwise(F.lit(0.0)), 6),
-        )
-        .filter(F.col("_j") >= threshold)
+        _set_join_jaccard(cands, sets)
+        .filter(F.col("jaccard") >= threshold)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("dup_of"))
     )

@@ -22,7 +22,10 @@ the cascade cannot drift from the operators it composes):
 3. ``neardup``    — banded MinHash-LSH pairs among survivors,
    verified Jaccard ≥ 0.6; the larger doc_id of each pair is killed
    (greedy min-id-wins at PAIR grain; transitive-closure clustering
-   is ``dedup_clusters``' job, not the cascade's);
+   is ``dedup_clusters``' job, not the cascade's).  The killed ids
+   come from ``minhash_lsh_dup_ids``, which verifies bucket minima
+   first and is equal by construction to the losing ids of the
+   standalone kernel's pairs;
 4. ``boilerplate``— C4-style line grain over the remaining survivors:
    docs whose cross-doc duplicate-line characters are ≥ ``BOILER_T``
    of their text;
@@ -51,7 +54,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_lsh_dedup
+from ..operators.dedup import minhash_lsh_dup_ids
 from ..tables import spread, table
 from .dedup_queries import ORACLE_MINHASH_LSH_NEARDUPS
 from .intra_doc_dedup import ORACLE_INTRA_DOC_DEDUP, intra_doc_retention
@@ -119,12 +122,11 @@ def q_dedup_cascade_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = s1r.filter(~rep_cond).drop("dup_char_frac")
 
     # stage 3: banded MinHash near-dup among s2 (the standalone
-    # kernel with the standalone constants); larger id of a pair dies
-    pairs = minhash_lsh_dedup(
+    # kernel's constants); larger id of a verified pair dies
+    nd_ids = minhash_lsh_dup_ids(
         s2, "doc_id", "text", k=16, shingle_n=1, bands=4,
         rows_per_band=4, threshold=0.6,
-    )
-    nd_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
+    ).persist()
     nd_ids.count()
     nd_killed = s2.join(nd_ids, "doc_id").select(
         "doc_id", "source", "n_chars", F.lit("neardup").alias("reason")

@@ -82,3 +82,10 @@ def test_corpus_build_with_selection(spark, sf_dir, tmp_path):
     assert rows["corpus_split"] == rows["corpus_chunks"]
     sel = built["corpus_selected"]
     assert {"avg_llr", "mean_nll"} <= set(sel.columns)
+
+
+def test_corpus_build_leaves_no_cache(spark, sf_dir, tmp_path):
+    """Every frame the build caches is unpersisted before it returns."""
+    spark.catalog.clearCache()
+    build_corpus(spark, sf_dir, str(tmp_path / "corpus"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

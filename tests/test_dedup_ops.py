@@ -13,7 +13,10 @@ from itertools import combinations
 import pyspark.sql.functions as F
 import pytest
 
+from sleep_edf_data_pipeline_spark.functions.hashing import PERM_P, perm_coeffs
 from sleep_edf_data_pipeline_spark.operators.dedup import (
+    minhash_lsh_dedup,
+    minhash_lsh_dup_ids,
     ngram_jaccard_join,
     tokens,
     word_shingles,
@@ -189,3 +192,69 @@ def test_cross_split_leakage_is_lsh_pairs_restricted(spark, sf_dir):
         assert r["split_b"] == split_of(r["id_b"])
         audited[(r["id_a"], r["id_b"])] = r["jaccard"]
     assert audited == expected
+
+
+def _lsh_brute_force(docs, k=16, bands=4, rows=4, t=0.6):
+    """Pure-Python MinHash-LSH pruning on unigram token-hash sets.
+
+    Returns (ids that lose a verified pair, ids whose every bucket
+    minimum fails the verify).  Band buckets are keyed on the exact
+    signature slice (the operator keys on its xxhash64); every pair
+    sharing one is verified exactly.
+    """
+    import hashlib
+    import re
+
+    def h64(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    sets = {i: {h64(w) for w in re.split(r"\s+", txt.lower())} for i, txt in docs}
+    coeffs = perm_coeffs(k)
+    buckets = {}
+    for i, hs in sets.items():
+        sig = [min((a * (h % PERM_P) + b) % PERM_P for h in hs) for a, b in coeffs]
+        for band in range(bands):
+            key = (band, tuple(sig[band * rows : (band + 1) * rows]))
+            buckets.setdefault(key, []).append(i)
+
+    def passes(a, b):
+        inter = len(sets[a] & sets[b])
+        union = len(sets[a]) + len(sets[b]) - inter
+        return round(inter / union, 6) >= t
+
+    pruned, lowest = set(), {}
+    for ids in buckets.values():
+        for a, b in combinations(sorted(ids), 2):
+            if passes(a, b):
+                pruned.add(b)
+        for b in ids:
+            if b != min(ids):
+                lowest.setdefault(b, set()).add(min(ids))
+    need_pass2 = {b for b in pruned if not any(passes(m, b) for m in lowest[b])}
+    return pruned, need_pass2
+
+
+def test_minhash_lsh_dup_ids_is_lossless(spark):
+    """The two-pass pruned-id set equals the all-candidates one and a
+    brute force, on short documents over a tiny vocabulary (wide band
+    buckets, the near-duplicate-heavy shape) where some pruned ids fail
+    against every bucket minimum they share — so a pass-1-only
+    regression would drop them."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(10)]
+    docs = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 8))))
+        for i in range(1, 301)
+    ]
+    df = spark.createDataFrame(docs, "id long, text string")
+
+    want, need_pass2 = _lsh_brute_force(docs)
+    assert need_pass2, "corpus no longer exercises pass 2"
+    got = {r[0] for r in minhash_lsh_dup_ids(df, "id", "text").collect()}
+    all_pairs = {
+        r[0] for r in minhash_lsh_dedup(df, "id", "text").select("id_b").distinct().collect()
+    }
+    assert got == all_pairs
+    assert got == want
