@@ -38,7 +38,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import table_fingerprint
+from .tables import read_parquet, table_fingerprint
 from .writers.layout import write_clustered
 
 #: Mart storage root — session-temp by default (rebuilt per machine);
@@ -106,4 +106,4 @@ def serve(
             # a concurrent builder committed first — its copy is
             # byte-equivalent (deterministic build); keep it
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

@@ -26,6 +26,7 @@ from ..quality.validate import (
     assert_observed,
     observed_checks,
 )
+from ..tables import read_parquet
 
 
 @dataclass
@@ -66,7 +67,7 @@ class ModelRunner:
                 path = f"{self.warehouse_dir}/{m.name}"
                 obs_df.write.mode("overwrite").parquet(path)
                 assert_observed(obs, context=f" in {m.name}")
-                df = self.spark.read.parquet(path)
+                df = read_parquet(self.spark, path)
                 df.createOrReplaceTempView(m.name)
                 if m.unique_keys:
                     assert_checks(df, (), m.unique_keys)

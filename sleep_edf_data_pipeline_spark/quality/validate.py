@@ -22,7 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import SLEEP_STAGES
@@ -126,18 +126,18 @@ def validate_split(
     """V1: whole-entity validation split → (valid, quarantine).
 
     A single violating row disqualifies the entire entity, mirroring the
-    reference's whole-subject rejection (``pipeline.py:98-109``).  The
-    violating-entity set is tiny → broadcast anti/semi joins, no extra
-    shuffle of the fact table.
+    reference's whole-subject rejection (``pipeline.py:98-109``).  One
+    window over the entity flags every row of a violating entity, so the
+    input is read once and rows with a NULL entity (themselves contract
+    violations) form one entity and are quarantined; a join on the
+    entity key would never match them.  Quarantine rows keep their own
+    ``_violates`` flag.
     """
-    flagged = df.withColumn("_violates", contract_violation_condition(power_cols))
-    bad_entities = (
-        flagged.filter(F.col("_violates")).select(entity_col).distinct()
-    )
-    valid = flagged.join(
-        F.broadcast(bad_entities), [entity_col], "left_anti"
-    ).drop("_violates")
-    quarantine = flagged.join(F.broadcast(bad_entities), [entity_col], "left_semi")
+    flagged = df.withColumn(
+        "_violates", contract_violation_condition(power_cols)
+    ).withColumn("_bad", F.max("_violates").over(Window.partitionBy(entity_col)))
+    valid = flagged.filter(~F.col("_bad")).drop("_violates", "_bad")
+    quarantine = flagged.filter(F.col("_bad")).drop("_bad")
     return valid, quarantine
 
 

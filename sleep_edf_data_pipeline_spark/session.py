@@ -47,6 +47,15 @@ _DEFAULTS = {
     # cap JVM Metaspace after that pass is 234-238 MB, against 208-215 MB
     # at the default.  Static: read once, when the JVM starts.
     "spark.sql.codegen.cache.maxEntries": "8192",
+    # No per-call origin capture: with it on, every PySpark Column or
+    # function call makes about five extra py4j round trips to record
+    # its Python call site (building the 14 perfbench mart queries once
+    # took 21,715 py4j commands with it, 8,603 without).  Errors keep
+    # their class, condition and message; only the "== DataFrame ==
+    # ... was called from <file:line>" block goes.  PySpark reads the
+    # flag once per process, on its first API call, so it belongs in
+    # the builder config.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local[N] runs driver+executors in ONE JVM: N concurrent tasks
     # share a single heap, so the 1g default collapses under 32-way
     # joins (GCLocker thrash → dead SparkEnv).  Sized for the test

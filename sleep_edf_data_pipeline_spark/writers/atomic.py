@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import ERROR_SCHEMA
+from ..tables import read_parquet
 
 
 def write_epochs(
@@ -50,7 +51,7 @@ def write_epochs(
 
 def read_epochs(spark: SparkSession, path: str) -> DataFrame:
     """S6: schema-preserving scan of the partitioned epoch table."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def error_row(
@@ -132,7 +133,7 @@ def foreach_batch_upsert(path: str, keys: list[str]):
     def _upsert(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         if os.path.exists(path):
-            existing = spark.read.parquet(path)
+            existing = read_parquet(spark, path)
             merged = existing.join(
                 F.broadcast(batch.select(*keys).distinct()), keys, "left_anti"
             ).unionByName(batch)

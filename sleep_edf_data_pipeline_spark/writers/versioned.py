@@ -42,6 +42,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import read_parquet
+
 _MARKER = "_commit_v{:06d}"
 _MARKER_PREFIX = "_commit_v"
 
@@ -130,7 +132,7 @@ def read_versioned(
     d = snapshot_dir(path, version)
     if d is None:
         raise FileNotFoundError(f"versioned table {path} has no committed version")
-    return spark.read.parquet(d)
+    return read_parquet(spark, d)
 
 
 def commit_versioned(

@@ -170,6 +170,31 @@ def test_validate_split_quarantines_whole_subject(spark):
     assert quarantine.count() == poisoned.filter("subject_id = 1").count()
 
 
+def test_validate_split_quarantines_null_subject(spark):
+    """A NULL subject violates the contract; its rows cannot join back to a
+    violating-entity set on the key, so they must still land in quarantine."""
+    good = seed_epochs(spark, n_subjects=2)
+    orphaned = good.withColumn(
+        "subject_id",
+        F.when(F.col("subject_id") == 1, F.lit(None)).otherwise(F.col("subject_id")),
+    )
+    valid, quarantine = validate_split(orphaned)
+    n_orphans = good.filter("subject_id = 1").count()
+    assert n_orphans > 0
+    assert {r["subject_id"] for r in valid.select("subject_id").distinct().collect()} == {0}
+    assert quarantine.count() == n_orphans
+    assert quarantine.filter("subject_id IS NULL AND _violates").count() == n_orphans
+    assert valid.count() + n_orphans == good.count()
+
+
+def test_validate_split_scans_input_once(spark, tmp_path):
+    """``valid`` reads its input once: every parsed EDF file is parsed once."""
+    seed_epochs(spark, n_subjects=2).write.parquet(str(tmp_path / "epochs"))
+    valid, _ = validate_split(spark.read.parquet(str(tmp_path / "epochs")))
+    plan = valid._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_cohort_plausibility_full_corpus(spark):
     """Whole-pipeline semantic gate: cohort aggregates must be plausible.
 
